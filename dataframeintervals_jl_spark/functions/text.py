@@ -12,8 +12,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 TOKEN_RE = r"\S+"
-#: crude whitespace+punct-aware "BPE-ish" word/number/punct splitter
-BPE_ISH_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
 def _c(x) -> Column:
@@ -27,11 +25,6 @@ def tokens(text) -> Column:
 
 def token_count(text) -> Column:
     return F.size(tokens(text))
-
-
-def bpe_ish_tokens(text) -> Column:
-    """Sub-word-ish segmentation: letter runs, digit runs, single punct."""
-    return F.regexp_extract_all(_c(text), F.lit(BPE_ISH_RE), 0)
 
 
 def unique_token_count(text) -> Column:

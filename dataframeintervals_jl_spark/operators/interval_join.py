@@ -20,12 +20,25 @@ protocol ``setup_column_names!`` at src:67-95, materialization
 
 Spark-first execution instead of the reference's sort/sweep kernel:
 
-- declarative theta-join: Catalyst plans a BroadcastNestedLoopJoin which
-  is optimal when one side is small (the quantile-windows case);
-- ``strategy='binned'`` rewrites large×large joins into an equi-join on
-  overlapping fixed-width bins + residual predicate + emit-once guard —
-  this shuffles on the bin key, so it scales horizontally on a cluster
-  where a nested-loop join cannot.
+- broadcast strategies: a declarative theta-join, which Catalyst plans as
+  a BroadcastNestedLoopJoin — optimal when one side is small (the
+  quantile-windows case);
+- the binned rewrite for large×large joins: an equi-join on overlapping
+  fixed-width bins + residual overlap predicate + emit-once guard.  It
+  shuffles on the bin key, so it scales horizontally on a cluster where
+  a nested-loop join cannot.
+
+Every entry point shares one endpoint gate (:func:`_span_kinds`) and
+one binned kernel: :func:`_explode_bins` (drop empty spans, one row per
+touched bin), :func:`_bin_match` (bin equality, residual overlap,
+emit-once guard) and :func:`_stamp_ids` (persisted ids for outer
+recovery).  Global :func:`interval_join` (``auto``: one broadcast rule,
+:func:`_may_broadcast`, over plan-estimated then counted rows) and keyed
+:func:`interval_join_by` (key equalities added to the match) bin through
+:func:`_binned_join`; :func:`interval_semi_join` /
+:func:`interval_anti_join` explode + match and keep distinct left ids;
+:func:`interval_join_prebinned` reads tables already exploded by
+``write_binned_spans`` and runs only :func:`_bin_match`.
 """
 
 from __future__ import annotations
@@ -38,10 +51,13 @@ from pyspark.sql import functions as F
 from ..session import driver_count, driver_row
 from ..functions.spans import (
     SPAN_TYPE,
+    BOUNDS,
     exact_floor_div as _floor_div,
     normalize_bounds,
+    normalize_span_field_order,
     span_endpoint_domain,
     span_endpoints_integral,
+    span_endpoints_orderable_only,
     span_from_ordinal,
     span_intersect,
     span_to_ordinal,
@@ -109,8 +125,6 @@ def _adapt_endpoint_domains(left, right, on):
     lon, ron = _resolve_on(on)
     # reversed-field-order structs normalize to canonical (start, stop)
     # first — reference parity src:38 (NamedTuples in both orders)
-    from ..functions.spans import normalize_span_field_order
-
     left = normalize_span_field_order(left, lon)
     right = normalize_span_field_order(right, ron)
     dl = (
@@ -402,16 +416,61 @@ def _plan_size_bytes(df: DataFrame) -> Optional[int]:
     return size
 
 
-def _validate_no_nulls(stats_l: _SideStats, stats_r: _SideStats) -> None:
-    """Eager null check in the on-columns (parity: reference src:136-141;
-    exercised by test/runtests.jl:56-59)."""
-    if stats_l.nulls or stats_r.nulls:
-        side = "left" if stats_l.nulls else "right"
+def _may_broadcast(n_l: int, n_r: int, orderable_only: bool = False) -> bool:
+    """``auto``'s broadcast rule over per-side row counts — plan-estimated
+    or counted: broadcast the smaller side only when it is at most
+    :data:`AUTO_BROADCAST_ROWS` rows AND truly tiny, or its cross-pair
+    count fits the BNLJ budget, or its endpoints are strings (which
+    cannot bin — broadcast or bust)."""
+    small = min(n_l, n_r)
+    return small <= AUTO_BROADCAST_ROWS and (
+        small <= BROADCAST_TINY_ROWS
+        or n_l * n_r <= AUTO_BNL_PAIR_BUDGET
+        or orderable_only
+    )
+
+
+def _join_how(keepleft: bool, keepright: bool) -> str:
+    """Spark join type of the reference's ``keepleft``/``keepright``."""
+    outer = ("inner", "left_outer", "right_outer", "full_outer")
+    return outer[bool(keepleft) + 2 * bool(keepright)]
+
+
+def _no_string_bins(orderable_only: bool) -> None:
+    """The binned rewrite needs endpoint arithmetic: reject string spans
+    whether binned was asked for or ``auto`` picked it."""
+    if orderable_only:
         raise ValueError(
-            f"There are missing values in the {side} table of `interval_join`."
+            "strategy='binned' needs arithmetic span endpoints, and auto "
+            "picks it when the side it would broadcast exceeds "
+            f"{AUTO_BROADCAST_ROWS} rows; string-endpoint spans join via "
+            "the broadcast strategies (or 'hash' in interval_join_by) — for "
+            "a large x large join, map the dictionary-ordered key to an "
+            "integer ordinal first"
         )
 
 
+def _span_kinds(left, lon: str, right, ron: str, strategy):
+    """The endpoint gate of every interval-join entry point: both ``on``
+    columns must be span structs; string endpoints (ordered, not
+    arithmetic) may not mix with numeric ones and cannot take the binned
+    rewrite (bin math on endpoints).  Returns ``(integral,
+    orderable_only)`` — exact long bin arithmetic vs IEEE float bins, and
+    whether the spans are string-endpoint."""
+    lt, rt = left.schema[lon].dataType, right.schema[ron].dataType
+    validate_span_type(lt, f"left `on` ({lon})")
+    validate_span_type(rt, f"right `on` ({ron})")
+    orderable_only = span_endpoints_orderable_only(lt)
+    if orderable_only != span_endpoints_orderable_only(rt):
+        raise ValueError(
+            "cannot join string-endpoint spans against numeric-endpoint "
+            "spans: implicit casts would compare lexicographic garbage. "
+            "Cast one side first."
+        )
+    if strategy == "binned":
+        _no_string_bins(orderable_only)
+    integral = span_endpoints_integral(lt) and span_endpoints_integral(rt)
+    return integral, orderable_only
 
 
 _LBND = "__dfi_lbnd"
@@ -421,8 +480,6 @@ _RBND = "__dfi_rbnd"
 def _bounds_col_name(df: DataFrame, spec, side: str):
     """``None`` when ``spec`` is a flavor literal; the validated column
     name when it names a per-row flavor string column of ``df``."""
-    from ..functions.spans import BOUNDS
-
     if not isinstance(spec, str) or spec in BOUNDS:
         return None
     if spec in df.columns:
@@ -445,8 +502,6 @@ def _checked_flavor_col(name: str, side: str):
     """The per-row flavor column wrapped in a validity check that raises
     (first action) on any value outside the four flavors, including
     null — the per-row analog of the fused null-span rejection."""
-    from ..functions.spans import BOUNDS
-
     c = F.col(name)
     return F.when(c.isin(*BOUNDS), c).otherwise(
         F.raise_error(
@@ -562,42 +617,11 @@ def interval_join(
             bnd_drop.add(name)
             rb_spec = F.col(name)
         bounds = (lb_spec, rb_spec)
-    validate_span_type(
-        sides.left.schema[sides.left_on].dataType, f"left `on` ({sides.left_on})"
+    # string endpoints are comparison-only: the overlap/intersection
+    # expressions are type-generic, the binned rewrite is not
+    integral, orderable_only = _span_kinds(
+        sides.left, sides.left_on, sides.right, sides.right_on, strategy
     )
-    validate_span_type(
-        sides.right.schema[sides.right_on].dataType,
-        f"right `on` ({sides.right_on})",
-    )
-    integral = span_endpoints_integral(
-        sides.left.schema[sides.left_on].dataType
-    ) and span_endpoints_integral(sides.right.schema[sides.right_on].dataType)
-    from ..functions.spans import span_endpoints_orderable_only
-
-    # string endpoints: ordered but not arithmetic — the binned rewrite
-    # (bin math on endpoints) is impossible, so only the broadcast
-    # strategies apply; the overlap/intersection expressions themselves
-    # are comparison-only and type-generic
-    l_str = span_endpoints_orderable_only(
-        sides.left.schema[sides.left_on].dataType
-    )
-    r_str = span_endpoints_orderable_only(
-        sides.right.schema[sides.right_on].dataType
-    )
-    if l_str != r_str:
-        raise ValueError(
-            "cannot join string-endpoint spans against numeric-endpoint "
-            "spans: implicit casts would compare lexicographic garbage. "
-            "Cast one side first."
-        )
-    orderable_only = l_str
-    if orderable_only and strategy == "binned":
-        raise ValueError(
-            "strategy='binned' needs arithmetic span endpoints; string-"
-            "endpoint spans join via strategy='broadcast_left'/"
-            "'broadcast_right' (for a large x large join, map the "
-            "dictionary-ordered key to an integer ordinal first)"
-        )
 
     # Strategy fast path FIRST (plan statistics, no execution): a side
     # Catalyst already knows to be tiny is broadcast without scanning
@@ -607,20 +631,15 @@ def interval_join(
     if strategy == "auto":
         szl = _plan_size_bytes(sides.left)
         szr = _plan_size_bytes(sides.right)
-        if szl is not None and szr is not None:
-            small = min(szl, szr)
-            # size//MIN_ROW_BYTES over-counts rows (16 B is the narrow-
-            # est span row), so the pair-budget check is conservative
-            rl, rr = szl // MIN_ROW_BYTES, szr // MIN_ROW_BYTES
-            if (
-                small <= AUTO_BROADCAST_BYTES
-                and min(rl, rr) <= AUTO_BROADCAST_ROWS
-                and (
-                    min(rl, rr) <= BROADCAST_TINY_ROWS
-                    or rl * rr <= AUTO_BNL_PAIR_BUDGET
-                )
-            ):
-                strategy = "broadcast_left" if szl <= szr else "broadcast_right"
+        # size//MIN_ROW_BYTES over-counts rows (16 B is the narrowest
+        # span row), so the pair-budget check is conservative
+        if (
+            szl is not None
+            and szr is not None
+            and min(szl, szr) <= AUTO_BROADCAST_BYTES
+            and _may_broadcast(szl // MIN_ROW_BYTES, szr // MIN_ROW_BYTES)
+        ):
+            strategy = "broadcast_left" if szl <= szr else "broadcast_right"
 
     # stats are needed by auto strategy selection and the binned width
     # estimate — one fused agg action per side covers both, and when it
@@ -635,15 +654,12 @@ def interval_join(
     # full pass over the big table saved per auto join; at bench scale
     # it removes the probe materialization of derived left pipelines
     # (e.g. time_weighted_avg's validity table).
-    needs_stats = strategy == "auto" or (
-        strategy == "binned" and bin_width is None
-    )
     stats = None
-    if strategy == "auto":
+    if strategy == "auto" or (strategy == "binned" and bin_width is None):
         stats_r = _SideStats(
             sides.right, sides.right_on, arithmetic=not orderable_only
         )
-        if stats_r.n <= BROADCAST_TINY_ROWS:
+        if strategy == "auto" and stats_r.n <= BROADCAST_TINY_ROWS:
             strategy = "broadcast_right"
             if validate == "error":
                 if stats_r.nulls:
@@ -662,14 +678,11 @@ def interval_join(
                 ),
                 stats_r,
             )
-    elif needs_stats:
-        stats = (
-            _SideStats(sides.left, sides.left_on, arithmetic=not orderable_only),
-            _SideStats(sides.right, sides.right_on, arithmetic=not orderable_only),
-        )
     if validate == "error":
         if stats is not None:
-            _validate_no_nulls(*stats)
+            for side, st in zip(("left", "right"), stats):
+                if st.nulls:
+                    raise ValueError(_NULL_MSG.format(side=side))
         else:
             # single-pass faithful rejection: the check evaluates inside
             # the join itself (first action), no extra scan
@@ -680,35 +693,14 @@ def interval_join(
                 sides.right, sides.right_on, "right"
             )
 
-    how = {
-        (False, False): "inner",
-        (True, False): "left_outer",
-        (False, True): "right_outer",
-        (True, True): "full_outer",
-    }[(bool(keepleft), bool(keepright))]
+    how = _join_how(keepleft, keepright)
 
     if strategy == "auto":
-        small = min(stats, key=lambda s: s.n)
-        # pair-work guard: broadcast only a truly tiny side, a side
-        # whose cross-pair count fits the BNLJ budget, or a string-
-        # endpoint side (which cannot bin — broadcast or bust)
-        if small.n <= AUTO_BROADCAST_ROWS and (
-            small.n <= BROADCAST_TINY_ROWS
-            or stats[0].n * stats[1].n <= AUTO_BNL_PAIR_BUDGET
-            or orderable_only
-        ):
-            strategy = (
-                "broadcast_left" if small is stats[0] else "broadcast_right"
-            )
-        elif orderable_only:
-            raise ValueError(
-                "both sides exceed the broadcast threshold "
-                f"({AUTO_BROADCAST_ROWS} rows) and string-endpoint spans "
-                "cannot use the binned rewrite; map the dictionary-"
-                "ordered key to an integer ordinal for large x large "
-                "interval joins"
-            )
+        n_l, n_r = stats[0].n, stats[1].n
+        if _may_broadcast(n_l, n_r, orderable_only):
+            strategy = "broadcast_left" if n_l <= n_r else "broadcast_right"
         else:
+            _no_string_bins(orderable_only)
             strategy = "binned"
 
     if strategy == "binned":
@@ -796,37 +788,30 @@ def interval_join_prebinned(
                 f"{side} table for outer recovery; rewrite it with "
                 "write_binned_spans(..., row_ids=True)"
             )
-    w = max(int(bin_width), 1)
     # give the two bin (and row-id) columns distinct names BEFORE the
     # rename protocol so they neither clash nor get payload-renamed
-    lb = left.withColumnRenamed(bc, "__dfi_bin_l")
-    rb = right.withColumnRenamed(bc, "__dfi_bin_r")
-    if ROW_ID in lb.columns:
-        lb = lb.withColumnRenamed(ROW_ID, "__dfi_rid_l")
-    if ROW_ID in rb.columns:
-        rb = rb.withColumnRenamed(ROW_ID, "__dfi_rid_r")
+    # (renaming an absent row-id column is a no-op)
+    lb = left.withColumnRenamed(bc, "__dfi_bin_l").withColumnRenamed(
+        ROW_ID, "__dfi_rid_l"
+    )
+    rb = right.withColumnRenamed(bc, "__dfi_bin_r").withColumnRenamed(
+        ROW_ID, "__dfi_rid_r"
+    )
     sides = setup_column_names(
         lb, rb, on, renamecols=renamecols, renameon=renameon, makeunique=makeunique
     )
-    validate_span_type(sides.left.schema[sides.left_on].dataType, "left `on`")
-    validate_span_type(sides.right.schema[sides.right_on].dataType, "right `on`")
+    _span_kinds(sides.left, sides.left_on, sides.right, sides.right_on, "binned")
 
     # renamecols also touches the bin/id columns — resolve final names
     bin_l = sides.rename_left["__dfi_bin_l"]
     bin_r = sides.rename_right["__dfi_bin_r"]
     rid_l = sides.rename_left.get("__dfi_rid_l")
     rid_r = sides.rename_right.get("__dfi_rid_r")
-    l = sides.left.alias("__dfi_l")
-    r = sides.right.alias("__dfi_r")
-    lq = F.col(f"__dfi_l.{sides.left_on}")
-    rq = F.col(f"__dfi_r.{sides.right_on}")
-    inter_start = F.greatest(lq.getField("start"), rq.getField("start"))
-    cond = (
-        (F.col(f"__dfi_l.{bin_l}") == F.col(f"__dfi_r.{bin_r}"))
-        & spans_overlap(lq, rq, bounds=bounds)
-        & (F.col(f"__dfi_l.{bin_l}") == _floor_div(inter_start, w))
+    # integral bins: write_binned_spans always bins with exact long math
+    joined = _bin_match(
+        sides.left, sides.right, sides.left_on, sides.right_on, bounds,
+        bin_width, True, bins=(bin_l, bin_r),
     )
-    joined = l.join(r, cond, "inner").drop(bin_l, bin_r)
     if keepleft or keepright:
         # one base row per id: a span's FIRST bin copy always sits in
         # floor(start/W) (write_binned_spans' explode starts there for
@@ -835,7 +820,7 @@ def interval_join_prebinned(
         def _first_bin_copies(side_df, on_name, bin_name):
             return side_df.filter(
                 F.col(bin_name)
-                == _floor_div(F.col(on_name).getField("start"), w)
+                == _bin_of(F.col(on_name).getField("start"), bin_width, True)
             ).drop(bin_name)
 
         joined = _recover_unmatched(
@@ -861,55 +846,75 @@ def interval_join_prebinned(
 # ---------------------------------------------------------------------------
 
 
-def _float_floor_div(col: Column, w: float) -> Column:
-    """Bin id for double endpoints: IEEE ``floor(x / W)``.  Deterministic
-    (same expression everywhere it is compared), and over-covering by at
-    most one bin at exact multiples — the residual overlap predicate
-    re-verifies every pair, so extra bins cost only a few probe rows."""
-    return F.floor(col.cast("double") / F.lit(float(w))).cast("long")
+def _bin_of(x: Column, w, integral: bool) -> Column:
+    """Bin id of endpoint ``x``: exact long ``floor(x / W)`` for integral
+    endpoints (true floor division, so negative endpoints stay correct);
+    IEEE ``floor(x / W)`` for doubles — deterministic (the same
+    expression everywhere it is compared) and over-covering by at most
+    one bin at exact multiples, which the residual overlap predicate
+    re-verifies at the cost of a few probe rows."""
+    if integral:
+        return _floor_div(x, max(int(w), 1))
+    return F.floor(x.cast("double") / F.lit(float(w))).cast("long")
 
 
-def _bin_ids(span_col: Column, w, flavor: str, integral: bool) -> Column:
-    """The sequence of fixed-width bin ids a span touches.
+def _explode_bins(
+    df: DataFrame, on: str, w, flavor, integral: bool, keep_empty: bool = False
+) -> DataFrame:
+    """One row per fixed-width bin the span ``on`` touches (bin id in
+    :data:`_BIN`; the first bin is always ``floor(start/W)``).
 
-    ``flavor`` is THIS side's bounds flavor (per-side under mixed
-    bounds).  Integral endpoints, open-upper flavors ('[)', '()'): the
-    last touched point is ``stop - 1`` so the last bin is
-    ``floor((stop-1)/W)``; closed-upper '(]'/'[]' include ``stop``
-    itself (a match can bind exactly at ``stop`` when the other side's
-    binding bound is closed too).  Epoch-ns endpoints are nonneg in
-    practice, but we still use true floor division so negative endpoints
-    stay correct.  Double endpoints bin with IEEE floor over
-    ``[floor(start/W), floor(stop/W)]`` (a cover — possibly one spare
-    bin at exact multiples)."""
-    start = span_col.getField("start")
-    stop = span_col.getField("stop")
+    ``flavor`` is THIS side's bounds flavor (a Column for per-row
+    flavors).  Spans empty under it are dropped first ('[]' keeps
+    width-0 spans: ``[a, a]`` is the point ``a``) unless ``keep_empty`` —
+    ``write_binned_spans`` keeps them, since they still pad outer
+    prebinned joins.  Integral open-upper flavors end at bin
+    ``floor((stop-1)/W)``, closed-upper ones include ``stop`` (a match
+    can bind exactly there); invalid per-row flavors over-cover, which
+    the residual predicate rejects.  Double endpoints cover
+    ``[floor(start/W), floor(stop/W)]``."""
+    span = F.col(on)
+    start, stop = span.getField("start"), span.getField("stop")
+    per_row = isinstance(flavor, Column)
+    if not keep_empty and (per_row or flavor != "[]"):
+        nonempty = stop > start
+        df = df.filter(nonempty | (flavor == "[]") if per_row else nonempty)
     if not integral:
-        return F.sequence(_float_floor_div(start, w), _float_floor_div(stop, w))
-    if isinstance(flavor, Column):
-        # per-row flavors: open-upper rows end at stop-1, closed-upper
-        # at stop; invalid flavors over-cover (stop) — harmless, the
-        # residual predicate rejects them
-        last_point = stop - F.when(
+        last = stop
+    elif per_row:
+        last = stop - F.when(
             F.substring(flavor, 2, 1) == ")", F.lit(1)
         ).otherwise(F.lit(0))
     else:
-        last_point = stop - F.lit(1) if flavor in ("[)", "()") else stop
-    return F.sequence(_floor_div(start, w), _floor_div(last_point, w))
+        last = stop - F.lit(1) if flavor in ("[)", "()") else stop
+    bins = F.sequence(_bin_of(start, w, integral), _bin_of(last, w, integral))
+    return df.withColumn(_BIN, F.explode(bins))
 
 
-def _drop_empty_spans(df: DataFrame, col: Column, flavor) -> DataFrame:
-    """Drop spans empty under THIS side's flavor before binning: every
-    flavor with an open side makes width-0 spans empty; closed-closed
-    '[]' keeps them (``[a, a]`` is the point ``a``)."""
-    if isinstance(flavor, Column):
-        return df.filter(
-            (col.getField("stop") > col.getField("start"))
-            | (flavor == "[]")
-        )
-    if flavor == "[]":
-        return df
-    return df.filter(col.getField("stop") > col.getField("start"))
+def _bin_match(
+    lb: DataFrame, rb: DataFrame, lon: str, ron: str, bounds, w,
+    integral: bool, key_eq=(), bins=(_BIN, _BIN),
+) -> DataFrame:
+    """The bin equi-join every binned entry point shares: same bin (and
+    same key — ``key_eq``, keyed joins), the residual ``spans_overlap``,
+    and the emit-once guard.
+
+    A matched pair shares every bin its intersection touches; keeping
+    only ``bin == floor(greatest(l.start, r.start)/W)`` emits each pair
+    exactly once with NO distinct/dedup shuffle.  ``bins`` names the two
+    sides' bin columns (prebinned tables carry their own); both are
+    dropped from the result."""
+    lbin, rbin = bins
+    l, r = lb.alias("__dfi_l"), rb.alias("__dfi_r")
+    lq, rq = F.col(f"__dfi_l.{lon}"), F.col(f"__dfi_r.{ron}")
+    bin_l = F.col(f"__dfi_l.{lbin}")
+    cond = bin_l == F.col(f"__dfi_r.{rbin}")
+    for e in key_eq:
+        cond = cond & e
+    inter_start = F.greatest(lq.getField("start"), rq.getField("start"))
+    guard = bin_l == _bin_of(inter_start, w, integral)
+    cond = cond & spans_overlap(lq, rq, bounds=bounds) & guard
+    return l.join(r, cond, "inner").drop(lbin, rbin)
 
 
 def _estimate_bin_width(
@@ -963,55 +968,28 @@ def _estimate_bin_width(
 
 
 def _binned_join(
-    sides: _Sides, how: str, bounds: str, bin_width, integral: bool = True
+    sides: _Sides, how: str, bounds, bin_width, integral: bool = True, key_eq=()
 ) -> DataFrame:
-    """Equi-join on overlapping bins + residual predicate + emit-once guard.
-
-    A matched pair shares every bin its intersection touches; keeping
-    only ``bin == floor(greatest(l.start, r.start)/W)`` emits each pair
-    exactly once with NO distinct/dedup shuffle.  Outer variants recover
+    """The binned rewrite of the global and keyed joins: explode both
+    sides (:func:`_explode_bins`), match (:func:`_bin_match`; ``key_eq``
+    adds the keyed join's key equalities), and for outer variants recover
     unmatched rows via anti-joins on persisted row ids and
     ``unionByName(allowMissingColumns=True)`` — the same structure as the
     reference's ``join_indices`` missing-padding (src:157-180).
     """
     lb_flavor, rb_flavor = normalize_bounds(bounds)
-    w = max(int(bin_width), 1) if integral else float(bin_width)
-
     need_left_ids = how in ("left_outer", "full_outer")
     need_right_ids = how in ("right_outer", "full_outer")
     lefts, rights = sides.left, sides.right
-    if need_left_ids and LEFT_IDX not in lefts.columns:
-        lefts = lefts.withColumn(LEFT_IDX, F.monotonically_increasing_id())
-    if need_right_ids and RIGHT_IDX not in rights.columns:
-        rights = rights.withColumn(RIGHT_IDX, F.monotonically_increasing_id())
     if need_left_ids:
-        lefts = _register_persisted(lefts.persist())
+        lefts = _stamp_ids(lefts, LEFT_IDX)
     if need_right_ids:
-        rights = _register_persisted(rights.persist())
-
-    lcol = F.col(sides.left_on)
-    rcol = F.col(sides.right_on)
-    lb = _drop_empty_spans(lefts, lcol, lb_flavor)
-    rb = _drop_empty_spans(rights, rcol, rb_flavor)
-    lb = lb.withColumn(_BIN, F.explode(_bin_ids(lcol, w, lb_flavor, integral)))
-    rb = rb.withColumn(_BIN, F.explode(_bin_ids(rcol, w, rb_flavor, integral)))
-
-    l = lb.alias("__dfi_l")
-    r = rb.alias("__dfi_r")
-    lq = F.col(f"__dfi_l.{sides.left_on}")
-    rq = F.col(f"__dfi_r.{sides.right_on}")
-    inter_start = F.greatest(lq.getField("start"), rq.getField("start"))
-    guard_div = _floor_div(inter_start, w) if integral else _float_floor_div(
-        inter_start, w
+        rights = _stamp_ids(rights, RIGHT_IDX)
+    matched = _bin_match(
+        _explode_bins(lefts, sides.left_on, bin_width, lb_flavor, integral),
+        _explode_bins(rights, sides.right_on, bin_width, rb_flavor, integral),
+        sides.left_on, sides.right_on, bounds, bin_width, integral, key_eq,
     )
-    guard = F.col(f"__dfi_l.{_BIN}") == guard_div
-    cond = (
-        (F.col(f"__dfi_l.{_BIN}") == F.col(f"__dfi_r.{_BIN}"))
-        & spans_overlap(lq, rq, bounds=bounds)
-        & guard
-    )
-    matched = l.join(r, cond, "inner").drop(_BIN)
-
     if how == "inner":
         return matched
     return _recover_unmatched(
@@ -1019,16 +997,22 @@ def _binned_join(
     )
 
 
-# Persisted id-stamped inputs of outer binned joins (the persist is
-# load-bearing: monotonically_increasing_id must agree between the
-# matched pass and the anti-join, so the stamped plan may NOT be
-# recomputed).  Spark has no "result materialized" callback, so the
-# engine cannot know when the cache is safe to drop — entries are
-# tracked here and released explicitly by the caller.
+# Persisted id-stamped inputs of outer binned joins.  Spark has no
+# "result materialized" callback, so the engine cannot know when the
+# cache is safe to drop — entries are tracked here and released
+# explicitly by the caller.
 _PERSISTED_JOIN_INPUTS: list = []
 
 
-def _register_persisted(df: DataFrame) -> DataFrame:
+def _stamp_ids(df: DataFrame, name: str) -> DataFrame:
+    """Stamp row ids into ``name`` (kept when the frame already carries
+    them, as under ``with_indices``), persist, and register the cache for
+    :func:`release_join_caches`.  The persist is load-bearing:
+    ``monotonically_increasing_id`` must agree between the matched pass
+    and the anti-join, so the stamped plan may NOT be recomputed."""
+    if name not in df.columns:
+        df = df.withColumn(name, F.monotonically_increasing_id())
+    df = df.persist()
     _PERSISTED_JOIN_INPUTS.append(df)
     return df
 
@@ -1066,24 +1050,19 @@ def _recover_unmatched(
     left_id: str = LEFT_IDX,
     right_id: str = RIGHT_IDX,
 ) -> DataFrame:
-    """Outer recovery shared by the global/keyed binned paths and the
-    prebinned path: anti-join each id-stamped side against the matched
-    ids, union the padding rows in (``allowMissingColumns`` nulls the
-    other side).  ``monotonically_increasing_id`` is stable here because
-    both stamped inputs were persisted before the inner pass (the id-
-    stability subtlety lives in ONE place — here); prebinned callers
-    pass storage-resident ids instead (stable by construction, no
-    persist)."""
-    pieces = [matched]
-    if need_left_ids:
-        matched_l = matched.select(left_id).distinct()
-        pieces.append(lefts.join(matched_l, left_id, "left_anti"))
-    if need_right_ids:
-        matched_r = matched.select(right_id).distinct()
-        pieces.append(rights.join(matched_r, right_id, "left_anti"))
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
+    """Outer recovery shared by the binned paths and the prebinned path:
+    anti-join each id-stamped side against the matched ids, union the
+    padding rows in (``allowMissingColumns`` nulls the other side).  Ids
+    come from :func:`_stamp_ids` (persisted, so stable) or, on prebinned
+    tables, from storage (stable by construction, no persist)."""
+    out = matched
+    for need, side, rid in (
+        (need_left_ids, lefts, left_id),
+        (need_right_ids, rights, right_id),
+    ):
+        if need:
+            pad = side.join(matched.select(rid).distinct(), rid, "left_anti")
+            out = out.unionByName(pad, allowMissingColumns=True)
     return out
 
 
@@ -1105,29 +1084,7 @@ def _interval_semi_anti(
     lb_flavor, rb_flavor = normalize_bounds(bounds)
     lon, ron = _resolve_on(on)
     left, right, (dom_l, _dom_r) = _adapt_endpoint_domains(left, right, on)
-    validate_span_type(left.schema[lon].dataType, f"left `on` ({lon})")
-    validate_span_type(right.schema[ron].dataType, f"right `on` ({ron})")
-    integral = span_endpoints_integral(
-        left.schema[lon].dataType
-    ) and span_endpoints_integral(right.schema[ron].dataType)
-    from ..functions.spans import span_endpoints_orderable_only
-
-    l_str = span_endpoints_orderable_only(left.schema[lon].dataType)
-    r_str = span_endpoints_orderable_only(right.schema[ron].dataType)
-    if l_str != r_str:
-        raise ValueError(
-            "cannot join string-endpoint spans against numeric-endpoint "
-            "spans: implicit casts would compare lexicographic garbage. "
-            "Cast one side first."
-        )
-    orderable_only = l_str
-    if orderable_only and strategy == "binned":
-        raise ValueError(
-            "strategy='binned' needs arithmetic span endpoints; string-"
-            "endpoint spans use strategy='broadcast_right' (map the "
-            "dictionary-ordered key to an integer ordinal for large x "
-            "large joins)"
-        )
+    integral, orderable_only = _span_kinds(left, lon, right, ron, strategy)
 
     rspans = right.select(F.col(ron).alias("__dfi_rspan"))
     cond = spans_overlap(F.col(lon), F.col("__dfi_rspan"), bounds=bounds)
@@ -1138,21 +1095,14 @@ def _interval_semi_anti(
             return df
         return df.withColumn(lon, span_from_ordinal(F.col(lon), dom_l))
 
-    stats = None
+    sr = None
     if strategy == "auto":
         sr = _SideStats(rspans, "__dfi_rspan", arithmetic=not orderable_only)
         if sr.n <= AUTO_BROADCAST_ROWS:
             strategy = "broadcast_right"
-        elif orderable_only:
-            raise ValueError(
-                "right side exceeds the broadcast threshold "
-                f"({AUTO_BROADCAST_ROWS} rows) and string-endpoint spans "
-                "cannot use the binned rewrite; map the dictionary-"
-                "ordered key to an integer ordinal first"
-            )
         else:
+            _no_string_bins(orderable_only)
             strategy = "binned"
-            stats = (_SideStats(left, lon), sr)
 
     if strategy == "broadcast_right":
         return _restore(left.join(F.broadcast(rspans), cond, how))
@@ -1162,28 +1112,24 @@ def _interval_semi_anti(
             "'broadcast_right' or 'binned'"
         )
 
-    # Binned path: the existence test runs as a bin equi-join projecting
-    # ONLY matched left row ids (distinct — existence needs no
-    # emit-once bookkeeping), then one id-equi semi/anti join back onto
-    # the persisted id-stamped left.  monotonically_increasing_id is
-    # stable here because the stamped plan is persisted before reuse.
+    # Binned path: the existence test runs as the shared bin match
+    # projecting ONLY matched left row ids (distinct — the emit-once
+    # guard is harmless here), then one id-equi semi/anti join back onto
+    # the persisted id-stamped left.
     if bin_width is None:
-        if stats is None:
-            stats = (_SideStats(left, lon), _SideStats(rspans, "__dfi_rspan"))
-        bin_width = _estimate_bin_width(stats, integral)
-    w = max(int(bin_width), 1) if integral else float(bin_width)
+        sl = _SideStats(left, lon)
+        sr = sr or _SideStats(rspans, "__dfi_rspan")
+        bin_width = _estimate_bin_width((sl, sr), integral)
 
-    lid = _register_persisted(
-        left.withColumn(LEFT_IDX, F.monotonically_increasing_id()).persist()
-    )
-    lcol = F.col(lon)
-    rcol = F.col("__dfi_rspan")
-    lb = _drop_empty_spans(lid.select(LEFT_IDX, lcol), lcol, lb_flavor)
-    rb = _drop_empty_spans(rspans, rcol, rb_flavor)
-    lb = lb.withColumn(_BIN, F.explode(_bin_ids(lcol, w, lb_flavor, integral)))
-    rb = rb.withColumn(_BIN, F.explode(_bin_ids(rcol, w, rb_flavor, integral)))
+    lid = _stamp_ids(left, LEFT_IDX)
     matched_ids = (
-        lb.join(rb, (lb[_BIN] == rb[_BIN]) & spans_overlap(lcol, rcol, bounds), "inner")
+        _bin_match(
+            _explode_bins(
+                lid.select(LEFT_IDX, lon), lon, bin_width, lb_flavor, integral
+            ),
+            _explode_bins(rspans, "__dfi_rspan", bin_width, rb_flavor, integral),
+            lon, "__dfi_rspan", bounds, bin_width, integral,
+        )
         .select(LEFT_IDX)
         .distinct()
     )
@@ -1286,7 +1232,7 @@ def interval_join_by(
     timestamp_ntz endpoints are adapted to exact integer ordinals and
     restored on output.
     """
-    lb_flavor, rb_flavor = normalize_bounds(bounds)
+    normalize_bounds(bounds)
     by_cols = [by] if isinstance(by, str) else list(by)
     if not by_cols:
         raise ValueError("interval_join_by requires at least one `by` column")
@@ -1316,39 +1262,18 @@ def interval_join_by(
         renameon=renameon,
         makeunique=makeunique,
     )
-    validate_span_type(
-        sides.left.schema[sides.left_on].dataType, f"left `on` ({sides.left_on})"
+    integral, orderable_only = _span_kinds(
+        sides.left, sides.left_on, sides.right, sides.right_on, strategy
     )
-    validate_span_type(
-        sides.right.schema[sides.right_on].dataType,
-        f"right `on` ({sides.right_on})",
-    )
-    integral = span_endpoints_integral(
-        sides.left.schema[sides.left_on].dataType
-    ) and span_endpoints_integral(sides.right.schema[sides.right_on].dataType)
-    from ..functions.spans import span_endpoints_orderable_only as _ord_only
 
-    kl_str = _ord_only(sides.left.schema[sides.left_on].dataType)
-    kr_str = _ord_only(sides.right.schema[sides.right_on].dataType)
-    if kl_str != kr_str:
-        raise ValueError(
-            "cannot join string-endpoint spans against numeric-endpoint "
-            "spans: implicit casts would compare lexicographic garbage. "
-            "Cast one side first."
-        )
-    if kl_str and strategy == "binned":
-        raise ValueError(
-            "strategy='binned' needs arithmetic span endpoints; string-"
-            "endpoint keyed joins use 'hash' (the default) or the "
-            "broadcast strategies"
-        )
-
-    lefts, rights = sides.left, sides.right
     if validate == "error":
-        lefts = _with_fused_null_check(lefts, sides.left_on, "left")
-        rights = _with_fused_null_check(rights, sides.right_on, "right")
+        sides.left = _with_fused_null_check(sides.left, sides.left_on, "left")
+        sides.right = _with_fused_null_check(
+            sides.right, sides.right_on, "right"
+        )
     elif validate != "skip":
         raise ValueError(f"unsupported validate {validate!r}")
+    lefts, rights = sides.left, sides.right
 
     # final (possibly renamecols-suffixed) temp key names
     lk_final = [sides.rename_left[lk[c]] for c in by_cols]
@@ -1357,19 +1282,13 @@ def interval_join_by(
     key_eq = [
         F.col(a) == F.col(b) for a, b in zip(lk_final, rk_final)
     ]
-    overlap = spans_overlap(
-        F.col(sides.left_on), F.col(sides.right_on), bounds=bounds
-    )
     inter = span_intersect(F.col(sides.left_on), F.col(sides.right_on)).alias(
         sides.joined_on
     )
-    how = {
-        (False, False): "inner",
-        (True, False): "left_outer",
-        (False, True): "right_outer",
-        (True, True): "full_outer",
-    }[(keepleft, keepright)]
+    how = _join_how(keepleft, keepright)
 
+    # auto keeps its own rule: key equality bounds the pair work, so a
+    # keyed broadcast needs no cross-pair budget
     auto_key_factor = None
     if strategy == "auto":
         from ..plans.planner import (
@@ -1401,7 +1320,7 @@ def interval_join_by(
                 prof = keyed_join_profile(lefts, rights, lk_final, rk_final)
                 warn_if_hot_key(prof, "interval_join_by")
                 strategy = choose_keyed_strategy(prof)
-                if strategy == "binned" and kl_str:
+                if strategy == "binned" and orderable_only:
                     strategy = "hash"  # string endpoints cannot bin
                 if strategy == "binned" and bin_width is None:
                     auto_key_factor = prof.pair_key_factor
@@ -1415,6 +1334,9 @@ def interval_join_by(
         cond = key_eq[0]
         for e in key_eq[1:]:
             cond = cond & e
+        overlap = spans_overlap(
+            F.col(sides.left_on), F.col(sides.right_on), bounds=bounds
+        )
         joined = l_in.join(r_in, cond & overlap, how)
     elif strategy == "binned":
         if bin_width is None:
@@ -1425,49 +1347,7 @@ def interval_join_by(
             bin_width = _estimate_bin_width(
                 stats, integral, key_factor=auto_key_factor
             )
-        w = max(int(bin_width), 1) if integral else float(bin_width)
-        # outer recovery needs stable row identities across the inner
-        # pass and the anti-join — same persisted-id structure as the
-        # global binned path (_binned_join)
-        need_left_ids = keepleft
-        need_right_ids = keepright
-        if need_left_ids:
-            lefts = _register_persisted(
-                lefts.withColumn(
-                    LEFT_IDX, F.monotonically_increasing_id()
-                ).persist()
-            )
-        if need_right_ids:
-            rights = _register_persisted(
-                rights.withColumn(
-                    RIGHT_IDX, F.monotonically_increasing_id()
-                ).persist()
-            )
-        lcol, rcol = F.col(sides.left_on), F.col(sides.right_on)
-        lb = _drop_empty_spans(lefts, lcol, lb_flavor)
-        rb = _drop_empty_spans(rights, rcol, rb_flavor)
-        lb = lb.withColumn(_BIN, F.explode(_bin_ids(lcol, w, lb_flavor, integral)))
-        rb = rb.withColumn(
-            f"{_BIN}_r", F.explode(_bin_ids(rcol, w, rb_flavor, integral))
-        )
-        inter_start = F.greatest(
-            lcol.getField("start"), rcol.getField("start")
-        )
-        guard_div = (
-            _floor_div(inter_start, w)
-            if integral
-            else _float_floor_div(inter_start, w)
-        )
-        cond = F.col(_BIN) == F.col(f"{_BIN}_r")
-        for e in key_eq:
-            cond = cond & e
-        joined = lb.join(
-            rb, cond & overlap & (F.col(_BIN) == guard_div), "inner"
-        ).drop(_BIN, f"{_BIN}_r")
-        if how != "inner":
-            joined = _recover_unmatched(
-                joined, lefts, rights, need_left_ids, need_right_ids
-            )
+        joined = _binned_join(sides, how, bounds, bin_width, integral, key_eq)
     else:
         raise ValueError(
             f"unsupported strategy {strategy!r}; use 'auto', 'hash', "

@@ -233,34 +233,6 @@ def _hyperplanes(
     return planes
 
 
-def lsh_bucket(vec_col, dim: int, n_planes: int = 16, seed: int = LSH_BASE_SEED):
-    """Signed-projection LSH bucket id (bigint) for an embedding column.
-
-    Expression form — kept as the definitional reference (the DuckDB
-    oracles replay exactly this arithmetic) and for single-bucket uses;
-    bulk hashing goes through :func:`lsh_hash_frame`, which computes
-    the same buckets for all tables in one numpy matmul (the
-    per-plane ``aggregate`` here re-evaluates the quantization per
-    plane — 16× the work at the catalog parameters)."""
-    qv = _quantized(vec_col)
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(_hyperplanes(dim, n_planes, seed)):
-        proj = F.aggregate(
-            F.zip_with(
-                qv,
-                F.array(*[F.lit(c) for c in plane]),
-                lambda x, w: x * w,
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        bit = (1 << i) if i < 63 else -(1 << 63)
-        bucket = bucket.bitwiseOR(
-            F.when(proj > 0, F.lit(bit)).otherwise(F.lit(0)).cast("long")
-        )
-    return bucket
-
-
 def lsh_hash_frame(
     df: DataFrame,
     id_col: str,

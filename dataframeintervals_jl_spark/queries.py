@@ -496,7 +496,7 @@ FROM eb JOIN wb
 
 def q_interval_join_float_binned(spark, sf_dir):
     """The binned strategy over double-endpoint spans (IEEE float
-    binning, `_float_floor_div`): same query as q_interval_join_float,
+    binning, `_bin_of`): same query as q_interval_join_float,
     same oracle — the two physical plans must hash-match."""
     from .functions.spans import make_span_double
 
@@ -3254,31 +3254,11 @@ def q_similarity_lsh_maintained(spark, sf_dir):
     write_lsh_index(
         emb.filter(third == 0), path, dim=64, n_planes=8, n_tables=4
     )
-    # The two append segments are independent jobs writing disjoint
-    # epoch directories (each hashes its own batch against the base
-    # meta, with its own internal cache), so submit them from driver
-    # threads and let the second segment's tasks back-fill the first's
-    # stragglers (guide §2.6).  foreachBatch maintenance arrives
-    # serially in production — this parallelism is the batch-replay
-    # case (N segments to catch up), where it is exactly the
-    # independent-jobs overlap the guide prescribes.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f1 = _pool.submit(
-            inheritable_thread_target(
-                lambda: append_lsh_index(emb.filter(third == 1), path, 0)
-            )
-        )
-        _f2 = _pool.submit(
-            inheritable_thread_target(
-                lambda: append_lsh_index(emb.filter(third == 2), path, 1)
-            )
-        )
-        _f1.result()
-        _f2.result()
+    # one append per segment, in order — the way foreachBatch
+    # maintenance arrives (submitting the two from driver threads
+    # measured 0.997x and raced driver_rows' session-conf flip)
+    append_lsh_index(emb.filter(third == 1), path, 0)
+    append_lsh_index(emb.filter(third == 2), path, 1)
     out = lsh_rerank_topk_indexed(spark, path, queries, k=5, probe_radius=3)
     return out.select(
         "q_id", F.col("rank").cast("long").alias("rank"), "n_id", "score"
@@ -6807,13 +6787,15 @@ def q_masked_twa(spark, sf_dir):
     sf0.001/0.01/0.1 — non-degenerate everywhere.)  clamp_at pins
     the open-run horizon to the ORIGINAL windows' max stop (a tail
     mask would otherwise shift the fragment max).  The fragment set is
-    eagerly localCheckpoint'ed: it derives from a scan+join pipeline
-    that every downstream reference (horizon agg, join-strategy
-    probes) would otherwise replay — the round-10 plan carried 11
-    Window passes for exactly this reason; materialized, the executed
-    plan holds 3.  The windows table itself needs no checkpoint since
-    _es_windows computes its bounds driver-side (round 11) — it is a
-    pure ``spark.range(16)`` projection.
+    lazily localCheckpoint'ed (``eager=False``): it derives from a
+    scan+join pipeline that every downstream reference (horizon agg,
+    join-strategy probes) would otherwise replay — the round-10 plan
+    carried 11 Window passes for exactly this reason.  The first
+    action on it, the auto-join's count probe, materializes the
+    checkpoint, and every later reference reads it (the executed plan
+    holds 3 Window passes).  The windows table itself needs no
+    checkpoint since _es_windows computes its bounds driver-side
+    (round 11) — it is a pure ``spark.range(16)`` projection.
     The oracle replays it by inclusion-exclusion over merged mask
     islands: |run∩w\\M| = |run∩w| − Σ_i |run∩w∩island_i|, exact
     HUGEINT end to end."""
@@ -9664,12 +9646,12 @@ def _sql_url_canonical_dedup() -> str:
                 WHEN scheme = 'https'
                 THEN regexp_replace(hostport, ':443$', '')
                 ELSE hostport END,
-           '^www\.', '') AS host,
+           '^www\\.', '') AS host,
          regexp_replace(regexp_extract(rest, '^([^?]*)', 1), '/+$', '')
            AS path,
          coalesce(array_to_string(
            list_filter(string_split(
-               regexp_extract(rest, '\?(.*)$', 1), '&'),
+               regexp_extract(rest, '\\?(.*)$', 1), '&'),
              p -> p <> ''
                   AND NOT regexp_matches(p, '{TRACKING_PARAM_RE}')),
            '&'), '') AS qs

@@ -15,8 +15,13 @@ Centralizes the settings every entry point needs:
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
+
+# serializes driver_rows' read-flip-restore of the session AQE conf: two
+# unsynchronized probes could each restore the other's "false"
+_AQE_FLIP_LOCK = threading.Lock()
 
 
 def get_spark(app_name: str = "dataframeintervals_spark", cpus: int | None = None) -> SparkSession:
@@ -75,17 +80,18 @@ def driver_rows(df):
     NOT for wide results: without AQE a grouped aggregate keeps all
     ``spark.sql.shuffle.partitions`` reduce tasks in the collecting
     job, so call this only where the result is provably tiny (call
-    sites document their bounds).  The conf flip is session-scoped;
-    the engine issues these probes from the driver thread that is
-    building the query, never concurrently."""
+    sites document their bounds).  The conf flip is session-scoped and
+    held under a module lock, so probes from concurrent driver threads
+    run one at a time and always restore the session's own value."""
     spark = df.sparkSession
     key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "false")
-        return df.collect()
-    finally:
-        spark.conf.set(key, prev)
+    with _AQE_FLIP_LOCK:
+        prev = spark.conf.get(key)
+        try:
+            spark.conf.set(key, "false")
+            return df.collect()
+        finally:
+            spark.conf.set(key, prev)
 
 
 def driver_row(df):

@@ -188,10 +188,6 @@ def ensure_parallelism(df: DataFrame, min_partitions: int = 0) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: read_table(spark, sf_dir, t) for t in TABLES}
-
-
 def event_spans(
     spark: SparkSession, sf_dir: str, truncate_us: bool = False
 ) -> DataFrame:

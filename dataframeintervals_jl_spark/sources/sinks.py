@@ -164,13 +164,12 @@ def write_binned_spans(
     table name or an external catalog."""
     from pyspark.sql import functions as F
 
-    from ..operators.interval_join import _BIN, ROW_ID, _bin_ids
+    from ..operators.interval_join import _BIN, ROW_ID, _explode_bins
 
     if row_ids:
         df = df.withColumn(ROW_ID, F.monotonically_increasing_id())
-    binned = df.withColumn(
-        _BIN,
-        F.explode(_bin_ids(F.col(spancol), int(bin_width), bounds, integral=True)),
+    binned = _explode_bins(
+        df, spancol, int(bin_width), bounds, True, keep_empty=True
     )
     write_bucketed(
         binned, table, [_BIN], n_buckets, sort_cols=[_BIN], path=path, mode=mode
@@ -199,6 +198,18 @@ def write_sorted_spans(
     part.sortWithinPartitions(start).write.mode(mode).parquet(path)
 
 
+def _file_count(df: DataFrame, target_file_mb: int) -> int:
+    """Files of ``target_file_mb`` each for ``df``, from Catalyst's
+    plan-size estimate (no job runs); the input partition count when
+    the estimate is unavailable."""
+    from ..operators.interval_join import _plan_size_bytes
+
+    est = _plan_size_bytes(df)
+    if est is None:
+        return df.rdd.getNumPartitions()
+    return est // (target_file_mb * (1 << 20)) + 1
+
+
 def write_sized(
     df: DataFrame,
     path: str,
@@ -218,18 +229,7 @@ def write_sized(
     encoded size, so files land at-or-under target — the safe side of
     the trade (2× too many 128 MB files is noise; 2× too few 512 MB
     files hurts task granularity).  Returns the file count used."""
-    est = None
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        pass
-    if est is None or est <= 0 or est >= (1 << 62):  # unknown/huge sentinel
-        n = df.rdd.getNumPartitions()
-    else:
-        n = est // (target_file_mb * (1 << 20)) + 1
-    n = max(1, min(int(n), max_files))
+    n = max(1, min(_file_count(df, target_file_mb), max_files))
     df.repartition(n).write.mode(mode).parquet(path)
     return n
 
@@ -265,18 +265,7 @@ def compact_table(
     the local filesystem."""
     df = spark.read.parquet(path)
     files_before = _count_files(spark, path)
-    est = None
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        pass
-    if est is None or est <= 0 or est >= (1 << 62):
-        n = df.rdd.getNumPartitions()
-    else:
-        n = est // (target_file_mb * (1 << 20)) + 1
-    n = max(1, int(n))
+    n = max(1, _file_count(df, target_file_mb))
     if sort_cols:
         part = df.repartitionByRange(n, *sort_cols).sortWithinPartitions(
             *sort_cols

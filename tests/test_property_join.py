@@ -12,7 +12,13 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from dataframeintervals_jl_spark.operators.interval_join import interval_join
+from dataframeintervals_jl_spark.operators.interval_join import (
+    interval_anti_join,
+    interval_join,
+    interval_join_by,
+    interval_semi_join,
+    release_join_caches,
+)
 from tests.conftest import make_span_df
 
 EPOCH = 1_700_000_000_000_000_000
@@ -78,6 +84,47 @@ def test_interval_join_matches_brute_force(spark, left, right, keep):
         assert got == expected, f"strategy={strategy}"
 
 
+def assert_binned_entry_points(ldf, rdf, expected, n_left, label, **kw):
+    """The other callers of the shared binned kernel against the same
+    brute-force pairs: binned semi/anti joins return the matched left
+    ids (each once) and their complement; binned interval_join_by over
+    a constant key returns exactly the pairs.  One action collects all
+    three (tagged union), keeping the hypothesis examples cheap."""
+    from pyspark.sql import functions as F
+
+    def tagged(df, tag, rid):
+        return df.select(F.lit(tag).alias("t"), "lid", rid.alias("rid"))
+
+    no_rid = F.lit(None).cast("long")
+    semi = interval_semi_join(ldf, rdf, strategy="binned", **kw)
+    anti = interval_anti_join(ldf, rdf, strategy="binned", **kw)
+    by = interval_join_by(
+        ldf.withColumn("k", F.lit(0)),
+        rdf.withColumn("k", F.lit(0)),
+        "k",
+        validate="skip",
+        strategy="binned",
+        **kw,
+    )
+    rows = (
+        tagged(semi, "semi", no_rid)
+        .unionByName(tagged(anti, "anti", no_rid))
+        .unionByName(tagged(by, "by", F.col("rid")))
+        .collect()
+    )
+    release_join_caches()  # the binned semi/anti persisted their stamped left
+    got = {"semi": [], "anti": [], "by": []}
+    for r in rows:
+        got[r["t"]].append((r["lid"], r["rid"]))
+    matched = sorted({i for i, _ in expected})
+    assert sorted(i for i, _ in got["semi"]) == matched, f"semi {label}"
+    assert sorted(i for i, _ in got["anti"]) == sorted(
+        set(range(n_left)) - set(matched)
+    ), f"anti {label}"
+    assert set(got["by"]) == expected, f"interval_join_by {label}"
+    assert len(got["by"]) == len(expected), f"interval_join_by dup {label}"
+
+
 def brute_force_bounds(left, right, bounds):
     strict = bounds != "[]"
     pairs = set()
@@ -120,6 +167,10 @@ def test_bounds_property_both_strategies(spark, left, right, bounds):
         )
         got = {(r["lid"], r["rid"]) for r in j.select("lid", "rid").collect()}
         assert got == expected, f"strategy={strategy} bounds={bounds}"
+    assert_binned_entry_points(
+        ldf, rdf, expected, len(left), f"bounds={bounds}",
+        bounds=bounds, bin_width=7_000,
+    )
 
 
 def brute_force_mixed(left, right, lb, rb):
@@ -182,6 +233,10 @@ def test_mixed_bounds_property_both_strategies(spark, left, right, lb, rb):
         )
         got = {(r["lid"], r["rid"]) for r in j.select("lid", "rid").collect()}
         assert got == expected, f"strategy={strategy} bounds=({lb!r},{rb!r})"
+    assert_binned_entry_points(
+        ldf, rdf, expected, len(left), f"bounds=({lb!r},{rb!r})",
+        bounds=(lb, rb), bin_width=7_000,
+    )
 
 
 float_span_lists = st.lists(
@@ -224,6 +279,9 @@ def test_double_span_property_both_strategies(spark, left, right):
         )
         got = {(r["lid"], r["rid"]) for r in j.select("lid", "rid").collect()}
         assert got == expected, f"strategy={strategy}"
+    assert_binned_entry_points(
+        ldf, rdf, expected, len(left), "double spans", bin_width=0.5
+    )
 
 
 # ---------------------------------------------------------------------------
