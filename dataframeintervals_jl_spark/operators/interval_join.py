@@ -70,6 +70,10 @@ Renamer = Union[None, str, Callable[[str], str]]
 LEFT_IDX = "_left_idx"
 RIGHT_IDX = "_right_idx"
 _BIN = "__dfi_bin"
+# row ids the binned paths stamp for outer recovery and semi/anti; private
+# names, so a payload or ``with_indices`` column is never taken for them
+_LID = "__dfi_lid"
+_RID = "__dfi_rid"
 
 
 def _apply_rename(name: str, how: Renamer) -> str:
@@ -790,13 +794,12 @@ def interval_join_prebinned(
             )
     # give the two bin (and row-id) columns distinct names BEFORE the
     # rename protocol so they neither clash nor get payload-renamed
-    # (renaming an absent row-id column is a no-op)
-    lb = left.withColumnRenamed(bc, "__dfi_bin_l").withColumnRenamed(
-        ROW_ID, "__dfi_rid_l"
-    )
-    rb = right.withColumnRenamed(bc, "__dfi_bin_r").withColumnRenamed(
-        ROW_ID, "__dfi_rid_r"
-    )
+    lb = left.withColumnRenamed(bc, "__dfi_bin_l")
+    rb = right.withColumnRenamed(bc, "__dfi_bin_r")
+    if ROW_ID in lb.columns:
+        lb = lb.withColumnRenamed(ROW_ID, "__dfi_rid_l")
+    if ROW_ID in rb.columns:
+        rb = rb.withColumnRenamed(ROW_ID, "__dfi_rid_r")
     sides = setup_column_names(
         lb, rb, on, renamecols=renamecols, renameon=renameon, makeunique=makeunique
     )
@@ -829,8 +832,8 @@ def interval_join_prebinned(
             _first_bin_copies(sides.right, sides.right_on, bin_r),
             keepleft,
             keepright,
-            left_id=rid_l or LEFT_IDX,
-            right_id=rid_r or RIGHT_IDX,
+            left_id=rid_l or _LID,
+            right_id=rid_r or _RID,
         )
     out_cols = [
         c for c in sides.left_cols if c not in (bin_l, rid_l)
@@ -982,9 +985,9 @@ def _binned_join(
     need_right_ids = how in ("right_outer", "full_outer")
     lefts, rights = sides.left, sides.right
     if need_left_ids:
-        lefts = _stamp_ids(lefts, LEFT_IDX)
+        lefts = _stamp_ids(lefts, _LID)
     if need_right_ids:
-        rights = _stamp_ids(rights, RIGHT_IDX)
+        rights = _stamp_ids(rights, _RID)
     matched = _bin_match(
         _explode_bins(lefts, sides.left_on, bin_width, lb_flavor, integral),
         _explode_bins(rights, sides.right_on, bin_width, rb_flavor, integral),
@@ -1005,14 +1008,14 @@ _PERSISTED_JOIN_INPUTS: list = []
 
 
 def _stamp_ids(df: DataFrame, name: str) -> DataFrame:
-    """Stamp row ids into ``name`` (kept when the frame already carries
-    them, as under ``with_indices``), persist, and register the cache for
-    :func:`release_join_caches`.  The persist is load-bearing:
-    ``monotonically_increasing_id`` must agree between the matched pass
-    and the anti-join, so the stamped plan may NOT be recomputed."""
-    if name not in df.columns:
-        df = df.withColumn(name, F.monotonically_increasing_id())
-    df = df.persist()
+    """Stamp fresh row ids into the private column ``name``, persist, and
+    register the cache for :func:`release_join_caches`.  The ids are
+    always new: an input column of the same meaning (``with_indices``
+    output repeats a left id once per match) is not unique per row.  The
+    persist is load-bearing: ``monotonically_increasing_id`` must agree
+    between the matched pass and the anti-join, so the stamped plan may
+    NOT be recomputed."""
+    df = df.withColumn(name, F.monotonically_increasing_id()).persist()
     _PERSISTED_JOIN_INPUTS.append(df)
     return df
 
@@ -1047,22 +1050,24 @@ def _recover_unmatched(
     rights: DataFrame,
     need_left_ids: bool,
     need_right_ids: bool,
-    left_id: str = LEFT_IDX,
-    right_id: str = RIGHT_IDX,
+    left_id: str = _LID,
+    right_id: str = _RID,
 ) -> DataFrame:
     """Outer recovery shared by the binned paths and the prebinned path:
     anti-join each id-stamped side against the matched ids, union the
     padding rows in (``allowMissingColumns`` nulls the other side).  Ids
     come from :func:`_stamp_ids` (persisted, so stable) or, on prebinned
     tables, from storage (stable by construction, no persist)."""
-    out = matched
-    for need, side, rid in (
-        (need_left_ids, lefts, left_id),
-        (need_right_ids, rights, right_id),
-    ):
-        if need:
-            pad = side.join(matched.select(rid).distinct(), rid, "left_anti")
-            out = out.unionByName(pad, allowMissingColumns=True)
+    pieces = [matched]
+    if need_left_ids:
+        matched_l = matched.select(left_id).distinct()
+        pieces.append(lefts.join(matched_l, left_id, "left_anti"))
+    if need_right_ids:
+        matched_r = matched.select(right_id).distinct()
+        pieces.append(rights.join(matched_r, right_id, "left_anti"))
+    out = pieces[0]
+    for p in pieces[1:]:
+        out = out.unionByName(p, allowMissingColumns=True)
     return out
 
 
@@ -1113,27 +1118,27 @@ def _interval_semi_anti(
         )
 
     # Binned path: the existence test runs as the shared bin match
-    # projecting ONLY matched left row ids (distinct — the emit-once
-    # guard is harmless here), then one id-equi semi/anti join back onto
-    # the persisted id-stamped left.
+    # projecting ONLY matched left row ids (distinct, so the emit-once
+    # guard does not change the result), then one id-equi semi/anti join
+    # back onto the persisted id-stamped left.
     if bin_width is None:
         sl = _SideStats(left, lon)
         sr = sr or _SideStats(rspans, "__dfi_rspan")
         bin_width = _estimate_bin_width((sl, sr), integral)
 
-    lid = _stamp_ids(left, LEFT_IDX)
+    lid = _stamp_ids(left, _LID)
     matched_ids = (
         _bin_match(
             _explode_bins(
-                lid.select(LEFT_IDX, lon), lon, bin_width, lb_flavor, integral
+                lid.select(_LID, lon), lon, bin_width, lb_flavor, integral
             ),
             _explode_bins(rspans, "__dfi_rspan", bin_width, rb_flavor, integral),
             lon, "__dfi_rspan", bounds, bin_width, integral,
         )
-        .select(LEFT_IDX)
+        .select(_LID)
         .distinct()
     )
-    return _restore(lid.join(matched_ids, LEFT_IDX, how).drop(LEFT_IDX))
+    return _restore(lid.join(matched_ids, _LID, how).drop(_LID))
 
 
 def interval_semi_join(

@@ -472,6 +472,62 @@ def test_semi_anti_null_and_bounds(spark):
     ]
 
 
+def test_binned_paths_stamp_their_own_row_ids(spark):
+    """A ``_left_idx`` column in the input is never taken for the binned
+    paths' row ids: ``with_indices`` output repeats a left id once per
+    match, and a payload column may hold anything."""
+    from dataframeintervals_jl_spark import (
+        interval_anti_join,
+        interval_join_by,
+        interval_semi_join,
+        release_join_caches,
+    )
+    from pyspark.sql.types import LongType
+
+    ldf = make_span_df(
+        spark, [(0, 10, 1), (5, 15, 2), (20, 30, 3)], extra=[("a", LongType())]
+    )
+    wdf = make_span_df(spark, [(0, 8, 1), (8, 16, 2)], extra=[("w", LongType())])
+    # left ids 0 and 1 each match both windows: two rows per id, with
+    # different intersections ([0,8)/[8,10) and [5,8)/[8,15))
+    j = interval_join(ldf, wdf, with_indices=True, strategy="broadcast_right")
+    probe = make_span_df(spark, [(1, 2), (6, 7)])
+    rows = [
+        (r["a"], r["w"], r["span"]["start"], r["span"]["stop"])
+        for r in j.collect()
+    ]
+    hit = {
+        (a, w)
+        for a, w, s, e in rows
+        if any(max(s, ps) < min(e, pe) for ps, pe in [(1, 2), (6, 7)])
+    }
+    assert hit == {(1, 1), (2, 1)}
+    for join, want in (
+        (interval_semi_join, sorted(hit)),
+        (interval_anti_join, sorted({(a, w) for a, w, _, _ in rows} - hit)),
+    ):
+        got = join(j, probe, strategy="binned", bin_width=4)
+        assert sorted((r["a"], r["w"]) for r in got.collect()) == want, join
+
+    # a payload column named _left_idx (one value for every row): outer
+    # recovery must still pad the unmatched left row, payload untouched
+    lpay = ldf.withColumn("_left_idx", F.lit(7).cast("long"))
+    for out in (
+        interval_join(lpay, wdf, keepleft=True, strategy="binned", bin_width=4),
+        interval_join_by(
+            lpay.withColumn("k", F.lit(0)),
+            wdf.withColumn("k", F.lit(0)),
+            "k",
+            keepleft=True,
+            strategy="binned",
+            bin_width=4,
+        ),
+    ):
+        got = sorted((r["a"], r["w"], r["_left_idx"]) for r in out.collect())
+        assert got == [(1, 1, 7), (1, 2, 7), (2, 1, 7), (2, 2, 7), (3, None, 7)]
+    release_join_caches()
+
+
 # ---------------------------------------------------------------------------
 # interval_join_by (keyed overlap join)
 # ---------------------------------------------------------------------------

@@ -84,45 +84,38 @@ def test_interval_join_matches_brute_force(spark, left, right, keep):
         assert got == expected, f"strategy={strategy}"
 
 
-def assert_binned_entry_points(ldf, rdf, expected, n_left, label, **kw):
-    """The other callers of the shared binned kernel against the same
-    brute-force pairs: binned semi/anti joins return the matched left
-    ids (each once) and their complement; binned interval_join_by over
-    a constant key returns exactly the pairs.  One action collects all
-    three (tagged union), keeping the hypothesis examples cheap."""
+def assert_binned_entry_point(ldf, rdf, expected, n_left, draw, label, **kw):
+    """One other caller of the shared binned kernel per example, cycled
+    by ``draw`` (the drawn table sizes), against the same brute-force
+    pairs: a binned semi join returns the matched left ids (each once),
+    a binned anti join their complement, and a binned interval_join_by
+    over a constant key exactly the pairs."""
     from pyspark.sql import functions as F
 
-    def tagged(df, tag, rid):
-        return df.select(F.lit(tag).alias("t"), "lid", rid.alias("rid"))
-
-    no_rid = F.lit(None).cast("long")
-    semi = interval_semi_join(ldf, rdf, strategy="binned", **kw)
-    anti = interval_anti_join(ldf, rdf, strategy="binned", **kw)
-    by = interval_join_by(
-        ldf.withColumn("k", F.lit(0)),
-        rdf.withColumn("k", F.lit(0)),
-        "k",
-        validate="skip",
-        strategy="binned",
-        **kw,
-    )
-    rows = (
-        tagged(semi, "semi", no_rid)
-        .unionByName(tagged(anti, "anti", no_rid))
-        .unionByName(tagged(by, "by", F.col("rid")))
-        .collect()
-    )
-    release_join_caches()  # the binned semi/anti persisted their stamped left
-    got = {"semi": [], "anti": [], "by": []}
-    for r in rows:
-        got[r["t"]].append((r["lid"], r["rid"]))
+    entry = ("semi", "anti", "by")[draw % 3]
     matched = sorted({i for i, _ in expected})
-    assert sorted(i for i, _ in got["semi"]) == matched, f"semi {label}"
-    assert sorted(i for i, _ in got["anti"]) == sorted(
-        set(range(n_left)) - set(matched)
-    ), f"anti {label}"
-    assert set(got["by"]) == expected, f"interval_join_by {label}"
-    assert len(got["by"]) == len(expected), f"interval_join_by dup {label}"
+    if entry == "by":
+        by = interval_join_by(
+            ldf.withColumn("k", F.lit(0)),
+            rdf.withColumn("k", F.lit(0)),
+            "k",
+            validate="skip",
+            strategy="binned",
+            **kw,
+        )
+        got = [(r["lid"], r["rid"]) for r in by.select("lid", "rid").collect()]
+        assert set(got) == expected, f"interval_join_by {label}"
+        assert len(got) == len(expected), f"interval_join_by dup {label}"
+        return
+    join = interval_semi_join if entry == "semi" else interval_anti_join
+    ids = sorted(
+        r["lid"]
+        for r in join(ldf, rdf, strategy="binned", **kw).select("lid").collect()
+    )
+    release_join_caches()  # the binned semi/anti persisted its stamped left
+    if entry == "anti":
+        matched = sorted(set(range(n_left)) - set(matched))
+    assert ids == matched, f"{entry} {label}"
 
 
 def brute_force_bounds(left, right, bounds):
@@ -167,9 +160,9 @@ def test_bounds_property_both_strategies(spark, left, right, bounds):
         )
         got = {(r["lid"], r["rid"]) for r in j.select("lid", "rid").collect()}
         assert got == expected, f"strategy={strategy} bounds={bounds}"
-    assert_binned_entry_points(
-        ldf, rdf, expected, len(left), f"bounds={bounds}",
-        bounds=bounds, bin_width=7_000,
+    assert_binned_entry_point(
+        ldf, rdf, expected, len(left), len(left) + len(right),
+        f"bounds={bounds}", bounds=bounds, bin_width=7_000,
     )
 
 
@@ -233,9 +226,9 @@ def test_mixed_bounds_property_both_strategies(spark, left, right, lb, rb):
         )
         got = {(r["lid"], r["rid"]) for r in j.select("lid", "rid").collect()}
         assert got == expected, f"strategy={strategy} bounds=({lb!r},{rb!r})"
-    assert_binned_entry_points(
-        ldf, rdf, expected, len(left), f"bounds=({lb!r},{rb!r})",
-        bounds=(lb, rb), bin_width=7_000,
+    assert_binned_entry_point(
+        ldf, rdf, expected, len(left), len(left) + len(right),
+        f"bounds=({lb!r},{rb!r})", bounds=(lb, rb), bin_width=7_000,
     )
 
 
@@ -279,8 +272,9 @@ def test_double_span_property_both_strategies(spark, left, right):
         )
         got = {(r["lid"], r["rid"]) for r in j.select("lid", "rid").collect()}
         assert got == expected, f"strategy={strategy}"
-    assert_binned_entry_points(
-        ldf, rdf, expected, len(left), "double spans", bin_width=0.5
+    assert_binned_entry_point(
+        ldf, rdf, expected, len(left), len(left) + len(right),
+        "double spans", bin_width=0.5,
     )
 
 
